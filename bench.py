@@ -205,6 +205,8 @@ def _clean_flags(
     None (old callers / non-Linux) degrades to the steal-only gate."""
     if bw_gibs is None:
         bw_gibs = [BW_REF_GIBS] * len(steals)
+    if len(bw_gibs) != len(steals):
+        raise ValueError(f"{len(steals)} steal readings vs {len(bw_gibs)} bandwidth readings")
     floor = BW_CLEAN_FRACTION * BW_REF_GIBS
     return [
         s <= threshold and b >= floor for s, b in zip(steals, bw_gibs)
@@ -373,6 +375,16 @@ def _calibration_probe(spark, reps: int = 3) -> tuple[float, list[float], list[i
     return min(times), times, steals
 
 
+def _parse_sf(sf_dir: str) -> float:
+    """Scale factor named by a trailing ``sf<N>`` directory; -1.0 when
+    the name carries none or is not a number (``sf0.1.``)."""
+    m = re.search(r"sf([0-9.]+)/?$", sf_dir)
+    try:
+        return float(m.group(1)) if m else -1.0
+    except ValueError:
+        return -1.0
+
+
 def _warmup_dir(sf_dir: str, sf: float) -> str | None:
     """Smallest sibling sf* directory below the measured scale — the
     codegen-warmup input (derived from the layout, not hardcoded:
@@ -397,8 +409,7 @@ def _warmup_dir(sf_dir: str, sf: float) -> str | None:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "3")))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+    sf = _parse_sf(sf_dir)
 
     spark = get_spark("pangenome-bench")
     registry = all_queries()

@@ -24,7 +24,7 @@ from pangenomesasgraphdatabases_spark.functions.sequence import (
     delta_decode,
     gc_content,
 )
-from pangenomesasgraphdatabases_spark.graph.build import PangenomeGraph
+from pangenomesasgraphdatabases_spark.graph.build import PangenomeGraph, strain_nodes
 
 
 def reconstruct_full_sequences(graph: PangenomeGraph, feature_type: str = "CDS") -> DataFrame:
@@ -75,13 +75,7 @@ def enrich_features_with_composition(graph: PangenomeGraph, comp: DataFrame) -> 
             "left",
         )
     )
-    strains = feats.groupBy(F.col("strain").alias("name")).agg(
-        F.avg("GC").alias("avg_GC"),
-        F.stddev_samp("GC").alias("stDev_GC"),
-        F.avg("CAI").alias("avg_CAI"),
-        F.stddev_samp("CAI").alias("stDev_CAI"),
-    )
-    return dataclasses.replace(graph, features=feats, strains=strains)
+    return dataclasses.replace(graph, features=feats, strains=strain_nodes(feats))
 
 
 # --- BLAST enrichment (S11 / S14 / A14) ------------------------------------

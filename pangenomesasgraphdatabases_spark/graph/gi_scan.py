@@ -42,13 +42,16 @@ def gi_scan(
     )
 
     df = feats.join(nm, "feature_id", "left").join(F.broadcast(stats), "strain")
-    z_gc = (F.col("GC") - F.col("avg_GC")) / F.col("stDev_GC")
-    z_cai = (F.col("CAI") - F.col("avg_CAI")) / F.col("stDev_CAI")
+    # pandas parity for a zero-variance strain: z = 0/0 is NaN there,
+    # null here (a plain divide raises under ANSI mode), and a null z
+    # is no deviation (NaN >= 1.5 is False).
+    z_gc = F.try_divide(F.col("GC") - F.col("avg_GC"), F.col("stDev_GC"))
+    z_cai = F.try_divide(F.col("CAI") - F.col("avg_CAI"), F.col("stDev_CAI"))
     df = (
         df.withColumn("z_GC", z_gc)
         .withColumn("z_CAI", z_cai)
-        .withColumn("dev_GC", (F.abs(F.col("z_GC")) >= z_thresh).cast("int"))
-        .withColumn("dev_CAI", (F.abs(F.col("z_CAI")) >= z_thresh).cast("int"))
+        .withColumn("dev_GC", F.when(F.abs(F.col("z_GC")) >= z_thresh, 1).otherwise(0))
+        .withColumn("dev_CAI", F.when(F.abs(F.col("z_CAI")) >= z_thresh, 1).otherwise(0))
     )
 
     w = Window.partitionBy("strain").orderBy("feature_start", "feature_id")
@@ -63,13 +66,14 @@ def gi_scan(
         F.row_number().over(w).alias("pos"),
         "z_GC",
         "z_CAI",
-        # pandas rolling(n) parity: null until the frame holds n rows.
+        # pandas rolling(n) parity: null until the frame holds n
+        # non-null values.
         F.when(
-            F.count(F.lit(1)).over(smooth) == smooth_window,
+            F.count("z_GC").over(smooth) == smooth_window,
             F.avg("z_GC").over(smooth),
         ).alias("roll_mean_z_GC"),
         F.when(
-            F.count(F.lit(1)).over(smooth) == smooth_window,
+            F.count("z_CAI").over(smooth) == smooth_window,
             F.avg("z_CAI").over(smooth),
         ).alias("roll_mean_z_CAI"),
         (F.sum("dev_GC").over(dev) > dev_count).cast("int").alias("gc_dev_run"),

@@ -1,4 +1,4 @@
-"""SparkSession factory tuned for the local[N] test harness.
+"""The package's one SparkSession factory, sized to the host it runs on.
 
 At cluster scale the same code runs unchanged; only master/memory conf
 differ.  AQE is on so skewed shuffles re-plan at runtime.
@@ -10,28 +10,37 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Share of physical memory given to the local[N] JVM heap.  local[N]
+# puts the driver and every executor thread in ONE JVM, whose RSS runs
+# well past -Xmx (metaspace, codegen, netty/Arrow buffers) and sits
+# beside the Python workers.  Half of MemTotal keeps the whole process
+# tree inside RAM: a heap larger than RAM never comes under GC pressure
+# and the JVM gets OOM-killed instead (a 48 GiB heap died at ~14.5 GB RSS
+# on a 15.7 GB host); 8g was the measured passing point there, and
+# half rounds to 7g.
+HEAP_SHARE = 0.5
+
+# The directory holding the package: Python workers need it on their
+# path to unpickle pandas_udf closures, whatever the caller's cwd.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _heap() -> str:
+    """``SPARK_DRIVER_MEMORY`` if set, else HEAP_SHARE of physical
+    memory in whole GiB (at least 1g)."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(total * HEAP_SHARE) // 2**30)}g"
+
 
 def get_spark(
     app_name: str = "pangenome-spark",
-    cpus: str | int | None = None,
     shuffle_partitions: int | None = None,
     initial_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    # AQE initial width precedence (ADVICE r8: the env var silently
-    # overrode an explicitly passed width and could leak across
-    # same-process get_spark calls): explicit initial_partitions arg >
-    # explicit shuffle_partitions arg > SPARK_GRAFT_INITIAL_PARTITIONS
-    # env (harness-level knob for callers that can't thread an arg) >
-    # the 32 small-scale default.
-    if initial_partitions is not None:
-        initial = initial_partitions
-    elif shuffle_partitions is not None:
-        initial = shuffle_partitions
-    else:
-        initial = int(
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "32")
-        )
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    initial = initial_partitions or shuffle_partitions or 32
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -58,12 +67,8 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local[N] puts driver + all N executor threads in ONE JVM:
-        # size the heap like the sum of a few executors, not like a
-        # cluster driver.  16g measurably GC-thrashed the 24-query
-        # bench (single queries 2x slower in-bench than isolated);
-        # 48g on the 128 GiB harness restores isolated-run timings.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", _heap())
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
     )

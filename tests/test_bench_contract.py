@@ -142,3 +142,26 @@ def test_bw_quick_probe_contract():
     r2 = bench._bw_quick()
     assert r1 > 0 and r2 > 0
     assert id(bench._bw_quick_arr) == arr_id
+
+
+def test_parse_sf_falls_back_on_malformed_names():
+    """One scale-factor parser for bench and the A/B tools: a trailing
+    sf<N> directory parses, anything else reads -1.0 instead of raising."""
+    from bench import _parse_sf
+
+    assert _parse_sf("/data/sf0.1") == 0.1
+    assert _parse_sf("/data/sf0.01/") == 0.01
+    assert _parse_sf("/data/sf0.1.") == -1.0
+    assert _parse_sf("/data/sf0.0.1") == -1.0
+    assert _parse_sf("/data/tables") == -1.0
+
+
+def test_clean_flags_rejects_mismatched_readings():
+    """Per-rep steal and bandwidth readings must pair one to one; zip
+    would silently drop the unpaired reps."""
+    import pytest
+    from bench import _clean_flags
+
+    assert _clean_flags([0, 999], [9.0, 9.0]) == [True, False]
+    with pytest.raises(ValueError):
+        _clean_flags([0, 0, 0], [9.0, 9.0])

@@ -4,10 +4,12 @@ writeback, Newick distances, RGP post-analytics."""
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import functions as F
 
 from pangenomesasgraphdatabases_spark.graph import fixtures as fx
+from pangenomesasgraphdatabases_spark.graph.build import build_graph
 from pangenomesasgraphdatabases_spark.graph.enrich import (
     blast_hits_from_xml,
     composition_metrics,
@@ -47,6 +49,21 @@ def test_composition_and_writeback(spark, pangenome):
     strains = {s.name: s for s in g2.strains.collect()}
     assert set(strains) == set(fx.STRAINS)
     assert all(s.avg_GC is not None for s in strains.values())
+
+
+def test_enriched_strain_stats_match_build(spark):
+    """Enrichment after the build and composition inside the build give
+    the same exact per-strain statistics."""
+    fix = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures_data")
+    fn, cn, comp = (
+        spark.read.parquet(f"{fix}/{t}.parquet")
+        for t in ("feature_nodes", "cluster_nodes", "composition")
+    )
+    enriched = enrich_features_with_composition(build_graph(spark, fn, cn), comp)
+    built = build_graph(spark, fn, cn, comp)
+    got = enriched.strains.orderBy("name").collect()
+    assert got == built.strains.orderBy("name").collect()
+    assert len(got) > 1 and all(r.avg_GC is not None for r in got)
 
 
 def test_blast_parse_and_enrich(spark, pangenome):

@@ -13,14 +13,13 @@ from __future__ import annotations
 import json
 import os
 import statistics
-import re
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import STEAL_CLEAN_JIFFIES, _read_steal, _warmup_dir  # noqa: E402
+from bench import STEAL_CLEAN_JIFFIES, _parse_sf, _read_steal, _warmup_dir  # noqa: E402
 from pangenomesasgraphdatabases_spark.queries.registry import all_queries  # noqa: E402
 from pangenomesasgraphdatabases_spark.session import get_spark  # noqa: E402
 
@@ -31,9 +30,7 @@ def main() -> None:
     names = sys.argv[3:]
     spark = get_spark("ab-queries")
     registry = all_queries()
-    m = re.search(r"sf([0-9.]+)/?$", sf_dir)
-    sf = float(m.group(1)) if m else -1.0  # ADVICE r15: parse numerically
-    warm = _warmup_dir(sf_dir, sf)
+    warm = _warmup_dir(sf_dir, _parse_sf(sf_dir))
     for name in names:
         q = registry[name]
         if warm:

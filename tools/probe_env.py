@@ -9,11 +9,11 @@ Usage: python tools/probe_env.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
-sys.path.insert(0, REPO)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 QUERIES = sys.argv[2:] or [
     "gi_scan_flagship",
@@ -27,11 +27,13 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 WORKER = r"""
 import sys, json, hashlib
-sys.path.insert(0, "/root/repo")
-mode, sf = sys.argv[1], sys.argv[2]
-names = sys.argv[3:]
-from pyspark.sql import SparkSession
+repo, mode, sf = sys.argv[1], sys.argv[2], sys.argv[3]
+names = sys.argv[4:]
+sys.path.insert(0, repo)
 if mode == "hostile":
+    # Deliberately not get_spark: this stands in for the driver's own
+    # session, whose timezone, width and Arrow setting we don't control.
+    from pyspark.sql import SparkSession
     b = (SparkSession.builder.master("local[7]")
          .appName("probe-hostile")
          .config("spark.sql.shuffle.partitions", "7")
@@ -39,14 +41,10 @@ if mode == "hostile":
          .config("spark.sql.execution.arrow.pyspark.enabled", "false")
          .config("spark.default.parallelism", "7")
          .config("spark.ui.enabled", "false"))
+    spark = b.getOrCreate()
 else:
-    b = (SparkSession.builder.master("local[32]")
-         .appName("probe-std")
-         .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.ui.enabled", "false"))
-spark = b.getOrCreate()
+    from pangenomesasgraphdatabases_spark.session import get_spark
+    spark = get_spark("probe-std")
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as em
 qs = em.queries()
@@ -70,7 +68,7 @@ def run(mode: str) -> dict:
     import json
 
     r = subprocess.run(
-        [sys.executable, "-c", WORKER, mode, SF, *QUERIES],
+        [sys.executable, "-c", WORKER, REPO, mode, SF, *QUERIES],
         capture_output=True, text=True, timeout=600,
     )
     if r.returncode != 0:

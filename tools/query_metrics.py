@@ -1,11 +1,13 @@
-"""Deterministic per-query execution metrics (r15 optimization rounds).
+"""Deterministic per-query execution metrics.
 
-Wall-clock on this sandbox is weather-bound (CPU steal / bandwidth
+Wall-clock on a shared host is weather-bound (CPU steal / bandwidth
 co-tenancy), so A/Bs also record the weather-insensitive facts: number
-of jobs/stages/tasks, shuffle read+write bytes, and executor CPU time
-(actual CPU consumed — steal stretches wall, not cpuTime).  Each named
-query runs once (after a codegen warmup at the smallest sibling SF)
-with the UI REST API on; the printed JSON line carries the deltas.
+of jobs and tasks, shuffle write bytes, and executor CPU time (actual
+CPU consumed — steal stretches wall, not cpuTime).  Each named query
+runs once (after a codegen warmup at the smallest sibling SF) on the
+``get_spark`` session with the Spark event log on; once the session
+stops, the log is parsed and each query's jobs (those submitted inside
+its run) are summed into one printed JSON line.
 
 Usage: python tools/query_metrics.py <sf_dir> <query> [query ...]
 """
@@ -14,90 +16,71 @@ from __future__ import annotations
 
 import json
 import os
-import re
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import _read_steal, _warmup_dir  # noqa: E402
+from bench import _parse_sf, _read_steal, _warmup_dir  # noqa: E402
 from pangenomesasgraphdatabases_spark.queries.registry import all_queries  # noqa: E402
-
-PORT = 4048
-
-
-def _get_spark():
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("query-metrics")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(PORT))
-        .getOrCreate()
-    )
+from pangenomesasgraphdatabases_spark.session import get_spark  # noqa: E402
+from pipebench.tracing import parse_event_log  # noqa: E402
 
 
-def _rest(spark, path: str):
-    # Read the ACTUAL UI address (ADVICE r15: if PORT is already bound
-    # Spark silently retries onto PORT+1.., and a hardcoded URL would
-    # 404 or hit another app's UI).
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/{path}"
-    with urllib.request.urlopen(url, timeout=20) as r:
-        return json.load(r)
-
-
-def _totals(spark) -> dict:
-    stages = _rest(spark, "stages?status=complete")
-    jobs = _rest(spark, "jobs")
-    return {
-        "jobs": len(jobs),
-        "stages": len(stages),
-        "tasks": sum(s.get("numCompleteTasks", 0) for s in stages),
-        "shuffle_read": sum(s.get("shuffleReadBytes", 0) for s in stages),
-        "shuffle_write": sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        "cpu_ms": sum(s.get("executorCpuTime", 0) for s in stages) // 1_000_000,
-        "run_ms": sum(s.get("executorRunTime", 0) for s in stages),
+def _enable_event_log(event_dir: str) -> None:
+    """Turn the uncompressed, single-file event log on for the JVM
+    that ``get_spark`` is about to launch."""
+    conf = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": f"file://{event_dir}",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
     }
+    args = " ".join(f"--conf {k}={v}" for k, v in conf.items())
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"{args} pyspark-shell"
 
 
 def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
-    spark = _get_spark()
+    event_dir = tempfile.mkdtemp(prefix="query-metrics-")
+    _enable_event_log(event_dir)
+    spark = get_spark("query-metrics")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
-    m = re.search(r"sf([0-9.]+)/?$", sf_dir)
-    sf = float(m.group(1)) if m else -1.0  # ADVICE r15: parse numerically
-    warm = _warmup_dir(sf_dir, sf)
+    warm = _warmup_dir(sf_dir, _parse_sf(sf_dir))
+    runs = []
     for name in names:
         q = registry[name]
         if warm:
             q.fn(spark, warm).write.format("noop").mode("overwrite").save()
             spark.catalog.clearCache()
-        t0w = _totals(spark)
         s0 = _read_steal()
         t0 = time.time()
         q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = round(time.time() - t0, 3)
-        steal = _read_steal() - s0
+        t1 = time.time()
+        runs.append((name, t0, t1, _read_steal() - s0))
         spark.catalog.clearCache()
-        t1w = _totals(spark)
-        delta = {k: t1w[k] - t0w[k] for k in t0w}
-        delta.update({"query": name, "wall": wall, "steal": steal})
-        print(json.dumps(delta), flush=True)
+    spark.stop()  # flushes and closes the event log
+
+    (log,) = os.listdir(event_dir)
+    jobs, totals = parse_event_log(os.path.join(event_dir, log))
+    shutil.rmtree(event_dir)
+    for name, t0, t1, steal in runs:
+        mine = [totals[jid] for t_sub, jid in jobs if t0 <= t_sub <= t1]
+        print(json.dumps({
+            "jobs": len(mine),
+            "tasks": sum(t.tasks for t in mine),
+            "shuffle_write": sum(t.shuffle_write_b for t in mine),
+            "cpu_ms": round(sum(t.cpu_s for t in mine) * 1000),
+            "run_ms": round(sum(t.run_s for t in mine) * 1000),
+            "query": name,
+            "wall": round(t1 - t0, 3),
+            "steal": steal,
+        }), flush=True)
 
 
 if __name__ == "__main__":
