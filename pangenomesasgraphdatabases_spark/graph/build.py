@@ -34,19 +34,6 @@ class PangenomeGraph:
     feature_in_strain: DataFrame
     cluster_in_strain: DataFrame
 
-    def register_views(self, spark: SparkSession, prefix: str = "pg_") -> None:
-        for name in (
-            "features",
-            "clusters",
-            "strains",
-            "ortholog",
-            "feature_neighbour",
-            "cluster_neighbour",
-            "feature_in_strain",
-            "cluster_in_strain",
-        ):
-            getattr(self, name).createOrReplaceTempView(prefix + name)
-
 
 def load_feature_nodes(feature_nodes: DataFrame) -> DataFrame:
     """Typed FEATURE load (01_creatingDatabase.cypher:2-26)."""

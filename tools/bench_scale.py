@@ -176,32 +176,18 @@ def main() -> None:
     )
     from pangenomesasgraphdatabases_spark.graph.rgp import find_rgps
 
-    def _read_steal() -> int:
-        """Cumulative steal jiffies (/proc/stat aggregate cpu line) —
-        the same probe bench.py uses; co-tenant bursts cost ~3x a
-        clean rep (SCALE.md), so each graph rep carries its own
-        steal delta and MIN-of-reps is the steal-robust statistic."""
-        try:
-            with open("/proc/stat") as fh:
-                parts = fh.readline().split()
-            return int(parts[8]) if len(parts) > 8 else 0
-        except (OSError, ValueError):
-            return 0
-
     def run_graph(
         n_strains: int, per_strain: int, reps: int
     ) -> dict[str, list]:
         f, c, comp = synthetic_feature_tables(spark, n_strains, per_strain)
-        out: dict[str, list] = {
-            "build": [], "rgp": [], "build_steal": [], "rgp_steal": []
-        }
+        out: dict[str, list] = {"build": [], "rgp": []}
         for _ in range(reps):
             # clearCache between reps drops the hub AND the sources;
             # re-persisting the synth inputs keeps data generation
             # outside the timed section every rep.
             for src in (f, c, comp):
                 src.persist().count()
-            s0, t0 = _read_steal(), time.time()
+            t0 = time.time()
             g = build_graph(spark, f, c, comp, persist=True)
             for tbl in (
                 "features",
@@ -215,11 +201,9 @@ def main() -> None:
             ):
                 _force(getattr(g, tbl))
             out["build"].append(round(time.time() - t0, 3))
-            out["build_steal"].append(_read_steal() - s0)
-            s0, t0 = _read_steal(), time.time()
+            t0 = time.time()
             _force(find_rgps(g, n_strains=n_strains))
             out["rgp"].append(round(time.time() - t0, 3))
-            out["rgp_steal"].append(_read_steal() - s0)
             clear()
         return out
 
@@ -239,13 +223,9 @@ def main() -> None:
             "data_ratio": ratio,
             "reps_small": small[key],
             "reps_big": big[key],
-            "steal_small": small[key + "_steal"],
-            "steal_big": big[key + "_steal"],
         }
         print(
-            f"{name}: {s:.1f}s -> {b:.1f}s ({b / s:.1f}x, min of "
-            f"{reps}; steal {small[key + '_steal']} / "
-            f"{big[key + '_steal']})",
+            f"{name}: {s:.1f}s -> {b:.1f}s ({b / s:.1f}x, min of {reps})",
             file=sys.stderr,
         )
 

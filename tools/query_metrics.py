@@ -1,10 +1,9 @@
 """Deterministic per-query execution metrics.
 
-Wall-clock on a shared host is weather-bound (CPU steal / bandwidth
-co-tenancy), so A/Bs also record the weather-insensitive facts: number
-of jobs and tasks, shuffle write bytes, and executor CPU time (actual
-CPU consumed — steal stretches wall, not cpuTime).  Each named query
-runs once (after a codegen warmup at the smallest sibling SF) on the
+Wall-clock on a shared host moves with co-tenant load, so A/Bs also
+record the facts that do not: number of jobs and tasks, shuffle write
+bytes, and executor CPU time.  Each named query runs once (after a
+codegen warmup at the smallest sibling SF) on the
 ``get_spark`` session with the Spark event log on; once the session
 stops, the log is parsed and each query's jobs (those submitted inside
 its run) are summed into one printed JSON line.
@@ -24,7 +23,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import _parse_sf, _read_steal, _warmup_dir  # noqa: E402
+from bench import _parse_sf, _warmup_dir  # noqa: E402
 from pangenomesasgraphdatabases_spark.queries.registry import all_queries  # noqa: E402
 from pangenomesasgraphdatabases_spark.session import get_spark  # noqa: E402
 from pipebench.tracing import parse_event_log  # noqa: E402
@@ -58,18 +57,17 @@ def main() -> None:
         if warm:
             q.fn(spark, warm).write.format("noop").mode("overwrite").save()
             spark.catalog.clearCache()
-        s0 = _read_steal()
         t0 = time.time()
         q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         t1 = time.time()
-        runs.append((name, t0, t1, _read_steal() - s0))
+        runs.append((name, t0, t1))
         spark.catalog.clearCache()
     spark.stop()  # flushes and closes the event log
 
     (log,) = os.listdir(event_dir)
     jobs, totals = parse_event_log(os.path.join(event_dir, log))
     shutil.rmtree(event_dir)
-    for name, t0, t1, steal in runs:
+    for name, t0, t1 in runs:
         mine = [totals[jid] for t_sub, jid in jobs if t0 <= t_sub <= t1]
         print(json.dumps({
             "jobs": len(mine),
@@ -79,7 +77,6 @@ def main() -> None:
             "run_ms": round(sum(t.run_s for t in mine) * 1000),
             "query": name,
             "wall": round(t1 - t0, 3),
-            "steal": steal,
         }), flush=True)
 
 

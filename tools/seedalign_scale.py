@@ -4,9 +4,8 @@
 The r12/r13 aligner scale evidence was single-point (16x corpus at
 10-knt subjects; one megabase payload A/B; one gapped corpus pair).
 This tool sweeps BOTH axes like the ann/linkage families and records
-the slope table + birth anchors, so bench_reconcile can adjudicate
-aligner drift against measured scaling behavior instead of a lone
-number:
+the slope table + birth anchors, so aligner drift is judged against
+measured scaling behavior instead of a lone number:
 
 * **corpus axis** (subject_len = 10 knt, the reference's cluster-
   representative scale): (subjects, queries) at 1x / 4x / 16x pair
@@ -78,28 +77,17 @@ def _corpus(spark, n_subj: int, n_q: int, subj_len: int, variant: str):
     return q.repartition(32), s.repartition(8)
 
 
-import bench  # noqa: E402  (repo root on path; shared probe helpers)
-
-# One steal reader repo-wide: bench.py owns it (graph_build_floor.py
-# reuses it the same way), so the scale tools and bench_reconcile
-# can never disagree on the metric.
-_read_steal = bench._read_steal
-
-
 def _time_point(spark, df, reps: int) -> dict:
-    times, steals = [], []
+    times = []
     for _ in range(reps):
-        s0 = _read_steal()
         t0 = time.time()
         df.write.format("noop").mode("overwrite").save()
         times.append(round(time.time() - t0, 2))
-        steals.append(_read_steal() - s0)
         spark.catalog.clearCache()
     return {
         "reps": times,
         "min": min(times),
         "median": round(statistics.median(times), 2),
-        "steal": steals,
     }
 
 
